@@ -398,21 +398,18 @@ object Bench {
       "index_build_dhash" -> (() =>
         graft.operators.Multimodal.buildDhashSketch(spark, sfDir)),
     )
-    // per-rep eviction for rows that memoize their own result
+    // per-rep eviction for rows that memoize their own result; the
+    // cur_dedup_clusters rep measures the propagation loop against the
+    // built pair index, not a read of the memoized converged labels
     val resetBeforeRep: Map[String, () => Unit] = Map(
-      "index_build_dedup" -> (() =>
-        graft.operators.Dedup.release(spark, Some(sfDir))),
-      "index_build_ivf" -> (() =>
-        graft.operators.Similarity.release(spark, Some(sfDir))),
-      "index_build_dhash" -> (() =>
-        graft.operators.Multimodal.release(spark, Some(sfDir))),
-      "corpus_clean" -> (() =>
-        graft.operators.CorpusPipeline.release(spark, Some(sfDir))),
-      // each rep measures the propagation loop against the built pair
-      // index, not a read of the memoized converged labels
-      "cur_dedup_clusters" -> (() =>
-        graft.operators.Curation.release(spark, Some(sfDir))),
-    )
+      "index_build_dedup" -> graft.operators.Dedup.Owner,
+      "index_build_ivf" -> graft.operators.Similarity.Owner,
+      "index_build_dhash" -> graft.operators.Multimodal.Owner,
+      "corpus_clean" -> graft.operators.CorpusPipeline.Owner,
+      "cur_dedup_clusters" -> graft.operators.Curation.Owner,
+    ).map { case (row, owner) =>
+      row -> (() => Artifacts.release(spark, Some(sfDir), Some(owner)))
+    }
 
     def loadavg1: Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
@@ -475,8 +472,8 @@ object Bench {
               // condition a fresh ingest JVM would see. Evidence status
               // (r18): the original r17 "6.9 vs 3.7 s on GC state" probe
               // phase was mislabeled (gcFirst was never passed — ADVICE
-              // r17); the CORRECTED DhashContextAb re-run on the
-              // post-ImageIO-fix build measures gc-before-build at
+              // r17); the CORRECTED gc-probe re-run (OPTIMIZATION_r18.md)
+              // on the post-ImageIO-fix build measures gc-before-build at
               // PARITY with no-gc (B 2.468 vs C 2.500 min), so this
               // System.gc() is kept as a harmless condition-pin, not a
               // measured win — and every full run now records un-gc'd
@@ -657,8 +654,8 @@ object Bench {
           // maps still held references to now-uncached frames, so later
           // shuffle-evidence rows executed recompute-inflated plans. The
           // two release calls drop exactly the indexes this leg reloads.
-          graft.operators.Dedup.release(spark, Some(sfDir))
-          graft.operators.Similarity.release(spark, Some(sfDir))
+          Seq(graft.operators.Dedup.Owner, graft.operators.Similarity.Owner)
+            .foreach(o => Artifacts.release(spark, Some(sfDir), Some(o)))
           val steps: Seq[(String, () => Unit)] = Seq(
             "index_load" -> (() =>
               graft.GraftSession.loadIndexes(spark, sfDir,

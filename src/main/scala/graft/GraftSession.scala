@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Stable per-session identity for the operator caches' keys.
+  /** Stable per-session identity for the [[Artifacts]] keys.
     * `System.identityHashCode(spark)` (the old key) can COLLIDE: after a
     * session is GC'd its hash value can be reissued to a new session,
     * which would then silently read the dead session's cache entries.
@@ -48,35 +48,23 @@ object GraftSession {
       }
     }
 
-  /** Release every frame the graft operator caches have pinned for
-    * `spark` — the Dedup signature index + candidate-pair indexes and the
-    * CorpusPipeline cleaned corpus: unpersists their storage blocks
-    * (blocking, so executor memory is free on return) and evicts the
-    * cache entries. Pass `dir` to release a single corpus only. Queries
-    * stay valid afterwards — the next consumer rebuilds the index.
-    * Bench and Verify call this at teardown; long-lived sessions should
-    * call it between corpora.
+  /** Release every artifact graft has memoized for `spark` in
+    * [[Artifacts]] — signature, IVF, pixel and dHash indexes, the cleaned
+    * corpus, cluster labels, the daily event aggregate, replay logs, eval
+    * shingle sets and probe broadcasts — running each entry's free action
+    * (blocking unpersist, checkpoint free, broadcast destroy), so executor
+    * memory is free on return. Pass `dir` to release a single corpus only.
+    * Queries stay valid afterwards: the next consumer rebuilds. Bench and
+    * Verify call this at teardown; long-lived sessions should call it
+    * between corpora.
     */
-  def release(spark: SparkSession, dir: Option[String] = None): Unit = {
-    graft.operators.Dedup.release(spark, dir)
-    graft.operators.Similarity.release(spark, dir)
-    graft.operators.CorpusPipeline.release(spark, dir)
-    graft.operators.Curation.release(spark, dir)
-    graft.operators.EventAnalytics.release(spark, dir)
-    graft.operators.Multimodal.release(spark, dir)
-    graft.streaming.KafkaReplay.release(spark, dir)
-    graft.streaming.DocStream.release(spark, dir)
-    // full-session teardown also sweeps probe-set broadcasts cached from
-    // non-DocStream call sites (per-dir release is handled by DocStream,
-    // which knows the dir → artifact mapping)
-    if (dir.isEmpty)
-      graft.plans.SetMemberCountBc.release(spark, None)
-  }
+  def release(spark: SparkSession, dir: Option[String] = None): Unit =
+    Artifacts.release(spark, dir)
 
   /** Restore the persisted dedup + IVF index artifacts for `dir`.
-    * Sequential on purpose: an r18 A/B (IndexLoadAb phase A vs S) found
-    * Future-based concurrent restore NO faster than back-to-back calls —
-    * at restore scale the wall clock is bound by the driver's
+    * Sequential on purpose: an r18 A/B found Future-based concurrent
+    * restore NO faster than back-to-back calls (SURVEY.md, Round-18 notes
+    * (1)) — at restore scale the wall clock is bound by the driver's
     * single-threaded scheduling of tiny jobs, which concurrency cannot
     * overlap — so the simple form is the honest one.
     */
@@ -114,6 +102,13 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // graft cuts lineage with localCheckpoint on purpose, and each cut
+    // logs an expected "RDD … was locally checkpointed" WARN. Spark logs
+    // it under the RDD's runtime class (MapPartitionsRDD for a Dataset),
+    // not under org.apache.spark.rdd.RDD, so silence both.
+    Seq("org.apache.spark.rdd.RDD", "org.apache.spark.rdd.MapPartitionsRDD")
+      .foreach(org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _, org.apache.logging.log4j.Level.ERROR))
     tune(s)
   }
 }

@@ -70,7 +70,7 @@ object OccupancyProbe {
         graft.operators.Dedup.bandBuckets(spark, dir), "bn", 64)
       println(s"""{"sf_dir":"$dir","prefix_postings":$prefix,""" +
         s""""band_buckets":$bands}""")
-      GraftSession.release(spark, Some(dir))
+      Artifacts.release(spark, Some(dir), Some(graft.operators.Dedup.Owner))
     }
     spark.stop()
   }

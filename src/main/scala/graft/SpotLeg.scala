@@ -55,7 +55,7 @@ object SpotLeg {
       else Seq("index_build_dedup", "dedup_prefix_join")
     val rows = names.map {
       case n @ "index_build_dedup" => n -> (() => {
-        graft.operators.Dedup.release(spark, Some(dir))
+        Artifacts.release(spark, Some(dir), Some(graft.operators.Dedup.Owner))
         graft.operators.Dedup.buildIndexes(spark, dir)
       })
       case n =>

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,19 +34,7 @@ private[operators] case class PackOut(doc_id: Long, shard: Int, pack_id: Int,
   */
 object Curation {
 
-  /** Session-memoized converged cluster labels per (session, corpus) —
-    * the propagation loop runs driver-side actions, so its result is
-    * materialized once and reread by every consumer (same lifecycle as
-    * Dedup's signature index; released via [[graft.GraftSession.release]]).
-    */
-  private val clusterCache = TrieMap.empty[(String, String), DataFrame]
-
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    clusterCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(clusterCache.remove(_).foreach(freeCheckpoint))
-  }
+  private[graft] val Owner = "Curation"
 
   /** Unpersist a localCheckpoint-backed frame's storage: the blocks live
     * on the checkpoint RDD inside the LogicalRDD leaf, not in the SQL
@@ -67,12 +53,14 @@ object Curation {
     * minimum doc_id reachable through the near-dup pair graph
     * (singletons keep their own id). Hash-min propagation to fixpoint; the
     * per-iteration convergence check is a count on the persisted join
-    * frame, not a second pass over the graph.
+    * frame, not a second pass over the graph. The loop runs driver-side
+    * actions, so the labels are memoized per (session, corpus) and reread
+    * by every consumer (released via [[graft.GraftSession.release]]).
     */
   private def clusterLabels(spark: SparkSession, dir: String,
       maxIter: Int = 20): DataFrame =
-    clusterCache.getOrElseUpdate(
-        (graft.GraftSession.sessionId(spark), dir), {
+    graft.Artifacts.getOrBuild(spark, dir, Owner, "labels",
+        freeCheckpoint) {
       val pairs = Dedup.dedupMinhashLsh(spark, dir).select(col("da"), col("db"))
       // The loop runs over PAIR-GRAPH NODES only — docs that appear in at
       // least one near-dup pair. Singletons (the overwhelming majority of
@@ -120,7 +108,7 @@ object Curation {
         .localCheckpoint() // eager: safe to drop the scratch frames now
       scratch.foreach(freeCheckpoint)
       memo
-    })
+    }
 
   /** Duplicate clustering: (doc_id, cluster_id, cluster_size) for every
     * document, cluster_id = min doc_id of its connected near-dup component

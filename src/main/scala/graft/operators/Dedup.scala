@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,6 +29,8 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
+  private[graft] val Owner = "Dedup"
+
   /** Session-scoped memoized "signature index": verified LSH candidate
     * pairs per (session, corpus dir, sketch kind), persisted
     * MEMORY_AND_DISK and materialized once.
@@ -42,39 +42,14 @@ object Dedup {
     * recomputing the sketch subtree on both sides of the band self-join.
     * Frames are O(candidate pairs), far smaller than the corpus.
     */
-  private val pairCache = TrieMap.empty[(String, String, String), DataFrame]
-
   private def cachedIndex(spark: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame =
-    pairCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir, kind), {
+    graft.Artifacts.getOrBuild(spark, dir, Owner, kind,
+        graft.Artifacts.unpersist) {
       val p = build.persist(StorageLevel.MEMORY_AND_DISK)
       p.count() // materialize: the candidate join runs exactly once
       p
-    })
-
-  /** The SIGNATURE INDEX itself: (doc_id, sig: array<bigint>,
-    * simhash: string), BOTH sketches computed in ONE pass over the
-    * tokenize→shingle subtree (which is ~all the cost — the sketch folds
-    * are marginal next to it), persisted for the session. Every LSH
-    * consumer derives its band relation from this frame, so the corpus is
-    * scanned and shingled exactly once no matter how many dedup flavors
-    * run. In a production deployment this frame is the bucketed signature
-    * TABLE written at ingest; the session cache is its in-process twin.
-    */
-  private val sketchCache = TrieMap.empty[(String, String), DataFrame]
-
-  /** Unpersist + evict this session's cached indexes (all corpora, or
-    * just `dir`). Called via GraftSession.release.
-    */
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    pairCache.keys.toSeq
-      .filter { case (s, d, _) => s == sid && dir.forall(_ == d) }
-      .foreach(pairCache.remove(_).foreach(_.unpersist(blocking = true)))
-    sketchCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(sketchCache.remove(_).foreach(_.unpersist(blocking = true)))
-  }
+    }
 
   /** Materialize the session's signature sketch + both candidate-pair
     * indexes for `dir`. In production this is INGEST-time cost (the
@@ -107,16 +82,16 @@ object Dedup {
     * artifact — identical results, zero corpus passes (spec-pinned).
     */
   def loadDedupIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    release(spark, Some(dir))
-    val sid = graft.GraftSession.sessionId(spark)
+    graft.Artifacts.release(spark, Some(dir), Some(Owner))
     val sk = spark.read.parquet(s"$path/sketches")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    sketchCache.put((sid, dir), sk)
+    graft.Artifacts.put(spark, dir, Owner, SketchKey,
+      graft.Artifacts.unpersist)(sk)
     val pr = spark.read.parquet(s"$path/pairs")
       .persist(StorageLevel.MEMORY_AND_DISK)
     pr.count()
-    pairCache.put((sid, dir, "pairs-64"), pr)
-    ()
+    graft.Artifacts.put(spark, dir, Owner, "pairs-64",
+      graft.Artifacts.unpersist)(pr)
   }
 
   /** Sketch relation over the subset of `dir`'s documents matching
@@ -201,8 +176,20 @@ object Dedup {
     } finally batch.unpersist(blocking = true)
   }
 
+  private val SketchKey = "sketch"
+
+  /** The SIGNATURE INDEX itself: (doc_id, sig: array<bigint>,
+    * simhash: string), BOTH sketches computed in ONE pass over the
+    * tokenize→shingle subtree (which is ~all the cost — the sketch folds
+    * are marginal next to it), persisted for the session. Every LSH
+    * consumer derives its band relation from this frame, so the corpus is
+    * scanned and shingled exactly once no matter how many dedup flavors
+    * run. In a production deployment this frame is the bucketed signature
+    * TABLE written at ingest; the session cache is its in-process twin.
+    */
   private[operators] def sketches(spark: SparkSession, dir: String): DataFrame =
-    sketchCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
+    graft.Artifacts.getOrBuild(spark, dir, Owner, SketchKey,
+        graft.Artifacts.unpersist) {
       graft.plans.GraftFunctions.register(spark)
       // no eager count: the first consumer's own map stage computes and
       // caches the partitions (one pass — saves a whole extra action)
@@ -211,7 +198,7 @@ object Dedup {
           call_function("graft_minhash8", col("sh")).as("sig"),
           call_function("graft_simhash64", col("sh")).as("simhash"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Candidate pairs from a banded signature relation, with a hot-bucket
     * guard. `bands` must have columns (doc_id, `payload`, band, key);

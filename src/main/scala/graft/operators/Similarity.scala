@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -232,34 +230,10 @@ object Similarity {
         (n * element_at(cNrms, p + 1)))
   }
 
-  /** Session-memoized IVF CORPUS INDEX per (session, corpus dir): the
-    * seeded codebook, the cid-ASSIGNED corpus (vec_id, label, embedding,
-    * nrm, cid, ccos — one argmax of 16 centroid cosines per vector, the
-    * step that touches all N rows) and the per-list angular radii
-    * (16 tiny rows), both persisted MEMORY_AND_DISK and materialized
-    * once.
-    *
-    * These are CORPUS properties, not query properties — in production
-    * the assigned table is written at INGEST time, exactly like Dedup's
-    * signature index, and every searcher ([[simIvfAnn]],
-    * [[simIvfPqAnn]], [[knnExactScored]]) reads it instead of
-    * recomputing the full-corpus centroid dots per run (the round-9
-    * verdict's top cost finding). Bench times the build as its
-    * `index_build` row; [[graft.GraftSession.release]] unpins it.
-    */
-  private val ivfCache =
-    TrieMap.empty[(String, String), (Codebook, DataFrame, DataFrame)]
+  private[graft] val Owner = "Similarity"
 
-  /** Unpersist + evict this session's cached IVF index (all corpora, or
-    * just `dir`). Called via GraftSession.release.
-    */
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    ivfCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(ivfCache.remove(_).foreach { case (_, a, r) =>
-        a.unpersist(blocking = true); r.unpersist(blocking = true)
-      })
+  private val freeIvf: ((Codebook, DataFrame, DataFrame)) => Unit = {
+    case (_, a, r) => a.unpersist(blocking = true); r.unpersist(blocking = true)
   }
 
   /** Materialize the session's IVF index for `dir` (ingest-time cost —
@@ -315,10 +289,9 @@ object Similarity {
     // at restore time job COUNT, not bytes, dominates)
     val radii = spark.read.parquet(s"$path/radii")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    release(spark, Some(dir))
-    ivfCache.put((graft.GraftSession.sessionId(spark), dir),
+    graft.Artifacts.release(spark, Some(dir), Some(Owner))
+    graft.Artifacts.put(spark, dir, Owner, "ivf", freeIvf)(
       (code, assigned, radii))
-    ()
   }
 
   /** The deterministic "late-arriving batch" the incremental-admission
@@ -460,9 +433,24 @@ object Similarity {
       .agg(acos(least(lit(1.0), greatest(lit(-1.0), min(col("ccos")))))
         .as("radius"))
 
+  /** Session-memoized IVF CORPUS INDEX per (session, corpus dir): the
+    * seeded codebook, the cid-ASSIGNED corpus (vec_id, label, embedding,
+    * nrm, cid, ccos — one argmax of 16 centroid cosines per vector, the
+    * step that touches all N rows) and the per-list angular radii
+    * (16 tiny rows), both persisted MEMORY_AND_DISK and materialized
+    * once.
+    *
+    * These are CORPUS properties, not query properties — in production
+    * the assigned table is written at INGEST time, exactly like Dedup's
+    * signature index, and every searcher ([[simIvfAnn]],
+    * [[simIvfPqAnn]], [[knnExactScored]]) reads it instead of
+    * recomputing the full-corpus centroid dots per run (the round-9
+    * verdict's top cost finding). Bench times the build as its
+    * `index_build` row; [[graft.GraftSession.release]] unpins it.
+    */
   private[operators] def ivfIndex(spark: SparkSession, dir: String)
       : (Codebook, DataFrame, DataFrame) =
-    ivfCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
+    graft.Artifacts.getOrBuild(spark, dir, Owner, "ivf", freeIvf) {
       val emb = withNorm(t(spark, dir, "embeddings"))
       val sorted = seededCodebook(emb).sortBy(_._1)
       val assigned = assignSeeded(emb, sorted)
@@ -472,7 +460,7 @@ object Similarity {
         .persist(StorageLevel.MEMORY_AND_DISK)
       radii.count()
       (sorted, assigned, radii)
-    })
+    }
 
   /** The IVF search stage over a given codebook: map-side list assignment
     * (argmax of rounded cosine, ties to the lowest cid), 4-list probing

@@ -218,11 +218,11 @@ case class SetMemberCount(left: Expression, right: Expression)
   * expression carries only the broadcast HANDLE (~100 bytes); the set
   * ships via broadcast blocks ONCE per executor and the probe hashset
   * builds once per deserialized instance — per-row cost identical to
-  * the literal form (SetProbeAb A/B: hash-identical output, and at a
-  * 3·10⁵-shingle synthetic artifact the literal plan serializes MBs
-  * per job where this stays constant). Streaming-safe: deterministic
-  * scalar, handle created once at query construction, micro-batches
-  * reuse the shipped blocks.
+  * the literal form (r17 A/B, SURVEY.md Round-17 notes (1): hash-
+  * identical output, and at a 3·10⁵-shingle synthetic artifact the
+  * literal plan serializes MBs per job where this stays constant).
+  * Streaming-safe: deterministic scalar, handle created once at query
+  * construction, micro-batches reuse the shipped blocks.
   */
 case class SetMemberCountBc(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[String]])
@@ -270,52 +270,34 @@ object SetMemberCountBc {
 
   /** One broadcast per (session, probe-set instance): repeated query
     * construction over the same cached artifact (bench reps,
-    * per-micro-batch restarts) must not re-broadcast it. Entries are
-    * evicted and DESTROYED explicitly via [[release]] (wired into
-    * [[graft.GraftSession.release]] and [[graft.streaming.DocStream]]'s
-    * artifact eviction) — the previous WeakHashMap self-cleanup never
-    * fired, because TorrentBroadcast pins the broadcast value (the same
-    * array used as the weak key) strongly in the driver BlockManager, so
-    * the weak entry stayed reachable and stale broadcasts accumulated
-    * per regenerated artifact (ADVICE r17). Session-scoping also stops a
-    * dead session's Broadcast from being served to a new SparkContext.
+    * per-micro-batch restarts) must not re-broadcast it. Entries live in
+    * [[graft.Artifacts]] under no corpus dir (""), so a per-dir release
+    * leaves them alone; they are DESTROYED on full-session release or
+    * when the artifact they back is evicted (see [[release]]). The
+    * previous WeakHashMap self-cleanup never fired, because
+    * TorrentBroadcast pins the broadcast value (the same array used as
+    * the weak key) strongly in the driver BlockManager, so stale
+    * broadcasts accumulated per regenerated artifact (ADVICE r17).
+    * Session-scoping also stops a dead session's Broadcast from being
+    * served to a new SparkContext.
     */
-  private val bcCache = scala.collection.concurrent.TrieMap
-    .empty[(String, IdKey),
-      org.apache.spark.broadcast.Broadcast[Array[String]]]
+  private[graft] val Owner = "SetMemberCountBc"
 
-  /** Live cache entries for `spark` — test seam for the release
-    * lifecycle.
-    */
-  private[graft] def cachedCount(spark: SparkSession): Int = {
-    val sid = graft.GraftSession.sessionId(spark)
-    bcCache.keys.count(_._1 == sid)
-  }
+  private val destroy: org.apache.spark.broadcast.Broadcast[Array[String]]
+      => Unit = b => try b.destroy() catch { case _: Throwable => () }
 
-  /** Destroy this session's cached broadcasts — those backing `arrs`
-    * only, or every entry of the session when `arrs` is None.
-    */
-  private[graft] def release(spark: SparkSession,
-      arrs: Option[Seq[Array[String]]] = None): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    bcCache.keys.toSeq
-      .filter { case (s, k) =>
-        s == sid && arrs.forall(_.exists(_ eq k.arr)) }
-      .foreach { key =>
-        bcCache.remove(key).foreach { b =>
-          try b.destroy() catch { case _: Throwable => () }
-        }
-      }
-  }
+  /** Destroy the cached broadcast backing `set`, if any. */
+  private[graft] def release(spark: SparkSession, set: Array[String]): Unit =
+    graft.Artifacts.release(spark, Some(""), Some(Owner),
+      Some(new IdKey(set)))
 
   /** `graft_leak_count(arr, set)` as a Column, with the set riding a
     * broadcast variable instead of a plan literal.
     */
   def column(spark: SparkSession, arrCol: org.apache.spark.sql.Column,
       set: Array[String]): org.apache.spark.sql.Column = {
-    val bc = bcCache.getOrElseUpdate(
-      (graft.GraftSession.sessionId(spark), new IdKey(set)),
-      spark.sparkContext.broadcast(set))
+    val bc = graft.Artifacts.getOrBuild(spark, "", Owner, new IdKey(set),
+      destroy)(spark.sparkContext.broadcast(set))
     org.apache.spark.sql.GraftColumnBridge.column(
       SetMemberCountBc(
         org.apache.spark.sql.GraftColumnBridge.expression(arrCol), bc))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -85,39 +84,21 @@ object KafkaReplay {
 
   /** (key bytes, value bytes, event-time micros) per Kafka partition. */
   private type PartitionLog = Array[Array[(Array[Byte], Array[Byte], Long)]]
-  private val cache = TrieMap.empty[(String, String, String, Int), PartitionLog]
-
-  /** Evict the replayed logs pinned for `spark` (one full event log per
-    * (path, table, partitions) — driver heap, not executor blocks). Pass
-    * `dir` to evict a single fixture path only. Wired into
-    * [[graft.GraftSession.release]] so a cycled bench/test session can't
-    * leak its replay log into the long-lived JVM.
-    */
-  def release(spark: SparkSession, dir: Option[String] = None): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    cache.keys
-      .filter(k => k._1 == sid && dir.forall(_ == k._2))
-      .foreach(cache.remove)
-  }
-
-  /** Test hook: does any replay log remain cached for `spark`? */
-  private[graft] def isCachedFor(spark: SparkSession): Boolean = {
-    val sid = graft.GraftSession.sessionId(spark)
-    cache.keys.exists(_._1 == sid)
-  }
+  private[graft] val Owner = "KafkaReplay"
 
   /** Materialize the fixture as partitioned, offset-ordered logs —
-    * memoized per (session, path, partitions) so every micro-batch plans
-    * against the same immutable "broker log". The session id in the key
-    * (the Dedup/Curation cache convention) means a rewritten fixture at
-    * the same path is re-read by a fresh session instead of replaying
-    * the dead session's bytes.
+    * memoized per (session, path, table, partitions) in
+    * [[graft.Artifacts]] so every micro-batch plans against the same
+    * immutable "broker log", and a rewritten fixture at the same path is
+    * re-read by a fresh session instead of replaying the dead session's
+    * bytes. The log lives in driver heap, so eviction (via
+    * [[graft.GraftSession.release]]) only drops the reference.
     */
   private[graft] def load(path: String, nParts: Int,
       table: String = "events"): PartitionLog = {
     val spark = SparkSession.active
-    val sid = graft.GraftSession.sessionId(spark)
-    cache.getOrElseUpdate((sid, path, table, nParts), {
+    graft.Artifacts.getOrBuild(spark, path, Owner, (table, nParts),
+        (_: PartitionLog) => ()) {
       // each row of the wire log is (key id, value json, event micros)
       val rows: Array[(Long, String, Long)] = table match {
         case "documents" =>
@@ -168,7 +149,7 @@ object KafkaReplay {
           us))
       }
       parts.map(_.result())
-    })
+    }
   }
 }
 

@@ -36,7 +36,7 @@ class Round18Spec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
 
     // fresh full rebuild over base+batch in one pass
-    Similarity.release(spark, Some(dir))
+    graft.Artifacts.release(spark, Some(dir), Some(Similarity.Owner))
     val (_, assignedFull, radiiFull) = Similarity.ivfIndex(spark, dir)
     val annFull = Similarity.simIvfAnn(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -97,7 +97,7 @@ class Round18Spec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
 
     // fresh full rebuild over base+batch, persisted for the raw compare
-    Dedup.release(spark, Some(dir))
+    graft.Artifacts.release(spark, Some(dir), Some(Dedup.Owner))
     val tmpFull = java.nio.file.Files.createTempDirectory("dedup_full").toString
     Dedup.saveDedupIndex(spark, dir, tmpFull)
     val skFull = spark.read.parquet(s"$tmpFull/sketches")
@@ -124,8 +124,10 @@ class Round18Spec extends AnyFunSuite {
   test("probe-set broadcast cache: entries are destroyed on " +
       "GraftSession.release, not left to WeakHashMap GC") {
     import spark.implicits._
+    def cachedCount: Int = graft.Artifacts.inventory(spark)
+      .count(_.owner == graft.plans.SetMemberCountBc.Owner)
     graft.GraftSession.release(spark)
-    val before = graft.plans.SetMemberCountBc.cachedCount(spark)
+    val before = cachedCount
     assert(before == 0, s"release must clear the session's entries: $before")
     val set = Array("a b c", "b c d")
     val df = Seq(Seq("a b c", "x y z")).toDF("sh")
@@ -133,13 +135,13 @@ class Round18Spec extends AnyFunSuite {
       graft.plans.SetMemberCountBc.column(spark, col("sh"), set).as("n"))
       .collect().head.getInt(0)
     assert(n == 1)
-    assert(graft.plans.SetMemberCountBc.cachedCount(spark) == 1)
+    assert(cachedCount == 1)
     // same array instance → same broadcast, no new entry
     df.select(graft.plans.SetMemberCountBc.column(spark, col("sh"), set))
       .collect()
-    assert(graft.plans.SetMemberCountBc.cachedCount(spark) == 1)
+    assert(cachedCount == 1)
     graft.GraftSession.release(spark)
-    assert(graft.plans.SetMemberCountBc.cachedCount(spark) == 0,
+    assert(cachedCount == 0,
       "full-session release must destroy the cached broadcasts")
   }
 }
